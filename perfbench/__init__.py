@@ -1,0 +1,1 @@
+"""spark-graft benchmark: workloads, tracing and checks (see README.md)."""
