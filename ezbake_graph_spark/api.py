@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ezbake_graph_spark.graph.loop import checkpoint
 from ezbake_graph_spark.graph.pregel import (  # noqa: F401  (re-exports)
     bfs,
     connected_components,
@@ -310,11 +311,8 @@ def harmonic_closeness(
             .join(rev.alias("e"), F.col("r.v") == F.col("e.src"))
             .select("r.t", F.col("e.dst").alias("v"), (F.col("r.d") + 1).alias("d"))
         )
-        dist = (
-            dist.unionByName(extended)
-            .groupBy("t", "v")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
+        dist = checkpoint(
+            dist.unionByName(extended).groupBy("t", "v").agg(F.min("d").alias("d"))
         )
         stats = dist.agg(F.count(F.lit(1)).alias("n"), F.sum("d").alias("s")).collect()[0]
         if (stats["n"], stats["s"]) == (n_pairs, sum_d):

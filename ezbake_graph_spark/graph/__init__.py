@@ -3,8 +3,9 @@
 The reference exposed a property-graph surface (TinkerPop-style [R]);
 its analytics capabilities map here onto vertex/edge DataFrames plus a
 Pregel-style BSP driver loop (same semantics as Pregel/GraphX [P]) —
-pure PySpark, so every superstep benefits from Catalyst, broadcast
-joins, and AQE.
+pure PySpark, so every superstep is a Catalyst plan. ``loop`` is the
+superstep runtime all graph loops share; ``pregel`` holds the
+algorithms.
 """
 
 from ezbake_graph_spark.graph.pregel import (

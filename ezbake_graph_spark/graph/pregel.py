@@ -5,138 +5,42 @@ BSP semantics per the Pregel/GraphX model [P]: each superstep is
   state    = state ⨝ messages → vertex update
 with driver-side iteration control (SURVEY.md §3.4).
 
-Scale design:
-- Vertex state is eagerly ``localCheckpoint``-ed every superstep —
-  truncates lineage (else the plan doubles per superstep, the
-  GraphX-on-DataFrames hazard [P]) AND breaks recompute (see
-  ``_truncate``).
-- Edges are symmetrized, partitioned by src, and cached ONCE; each
-  superstep's message join reuses that partitioning, so only the small
-  vertex-state side shuffles (``symmetrize``).
-- Partition count adapts to edge volume (``symmetrize``); AQE is off
-  and shuffle partitions pinned inside the loop (``_superstep_env``) —
-  both cut fixed per-superstep scheduling overhead, the dominant cost
-  for small supersteps.
-- Convergence checks are tiny jobs (``isEmpty`` over the checkpointed
-  state), run each superstep; fixed-iteration algorithms skip them.
+Scale design: every loop runs on the superstep runtime in
+``graph/loop.py`` —
+- vertex state is checkpointed every superstep (``checkpoint``:
+  lineage truncated, recompute broken, inherited statistics reset);
+- edges are symmetrized (``symmetrize``), then materialized,
+  partitioned by src and cached ONCE (``SuperstepLoop.keyed``), so
+  each superstep's message join shuffles only the small vertex-state
+  side;
+- AQE is off and shuffle partitions are pinned to the edge volume for
+  the loop's duration (``superstep_loop``), restored on exit.
+Convergence checks are tiny jobs (``isEmpty`` over the checkpointed
+state), run each superstep; fixed-iteration algorithms skip them.
 """
 
 from __future__ import annotations
 
 import functools
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-@contextmanager
-def _superstep_env(edges: DataFrame, directed: bool = False):
-    """Loop-scoped execution settings; yields the symmetrized edge set.
-
-    - AQE off: every superstep re-runs the same fixed, small,
-      known-size shuffles; AQE's runtime re-planning buys nothing there
-      and adds per-stage planning jobs (~16% of superstep wall time
-      measured on the sf0.1 PageRank).
-    - ``spark.sql.shuffle.partitions`` pinned BEFORE the symmetrized
-      edge build, provisionally to min(session conf, cluster
-      parallelism), then tightened to the edge-adapted count from
-      ``symmetrize``. Without the pin, every superstep's groupBy/window
-      — and the edge distinct itself — runs at the session default,
-      200 reduce tasks per stage on a vanilla session (measured: sf0.01
-      core_number 23 s unpinned vs 8 s pinned).
-
-    Settings are restored and the edge cache dropped on exit, so
-    one-shot queries keep the session's defaults and AQE's
-    coalesce/skew benefits.
-    """
-    spark = edges.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    provisional = max(
-        4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-    )
-    conf.set("spark.sql.shuffle.partitions", str(provisional))
-    sym = None
-    try:
-        sym = symmetrize(edges, directed=directed).cache()
-        conf.set("spark.sql.shuffle.partitions", str(sym.rdd.getNumPartitions()))
-        yield sym
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        if sym is not None:
-            sym.unpersist()
+from ezbake_graph_spark.graph.loop import checkpoint, superstep_loop
 
 
 def symmetrize(edges: DataFrame, directed: bool = False) -> DataFrame:
-    """Undirected view of an edge list: both directions, deduped,
-    hash-partitioned by ``src``. ``directed=True`` skips the reverse
-    union (messages then flow along edge direction only — what a
-    generic ``pregel_run`` over a directed graph needs) but keeps the
-    dedup + src-partitioning that lets every superstep's message join
-    reuse the cached layout.
-
-    The explicit repartition matters for the superstep loop: a cached
-    DataFrame advertises its partitioning, so every superstep's
-    ``edges ⨝ state ON src = id`` reuses it and shuffles ONLY the small
-    vertex-state side — the edge set (the big side, shuffled once here)
-    never moves again. This is the in-memory equivalent of bucketing
-    the edge table by src at 100 TB.
+    """Undirected view of an edge list: both directions, deduped.
+    ``directed=True`` skips the reverse union (messages then flow along
+    edge direction only — what a generic ``pregel_run`` over a directed
+    graph needs) but keeps the dedup. Loops lay the result out with
+    ``SuperstepLoop.keyed(sym, "src")``, the in-memory equivalent of
+    bucketing the edge table by src.
     """
     if directed:
-        both = edges.select("src", "dst").distinct()
-    else:
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        both = edges.select("src", "dst").unionByName(rev).distinct()
-    # Materialize ONCE (r13: eager localCheckpoint, not .cache()) so
-    # the sizing count and the repartition don't each recompute the
-    # union+distinct. The earlier .cache() was never unpersisted
-    # (the VERDICT r12 #8 leak class): every pregel call left a
-    # resident edge relation in the CacheManager for the session's
-    # lifetime, and bench runs 2..N were silently served the distinct
-    # for free. A localCheckpoint's blocks are released by the
-    # ContextCleaner when the plan goes unreachable (loop exit), so
-    # memory is bounded and every run pays its own materialization.
-    both = both.localCheckpoint(eager=True)
-    # Partition count sized to edge volume (~250k edge rows per task),
-    # clamped to the session's shuffle parallelism: a superstep runs
-    # dozens of tiny stages, so over-partitioning a small graph buys
-    # nothing and pays task-scheduling overhead per superstep (measured
-    # ~2x on the sf0.1 graph: 32 -> 8 partitions halves PageRank).
-    # At 100 TB edge counts push this to the clamp, i.e. full cluster
-    # parallelism.
-    conf_part = int(both.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_part = max(4, min(conf_part, both.count() // 250_000 + 1))
-    return both.repartition(n_part, "src")
-
-
-def _truncate(df: DataFrame, step: int, eager: bool = True) -> DataFrame:
-    """Checkpoint the new vertex state EVERY superstep.
-
-    This does two jobs at once: truncates lineage (otherwise the plan
-    doubles per superstep — the GraphX-on-DataFrames hazard) and breaks
-    recompute (without it, the convergence check and the next superstep
-    each re-execute this superstep's shuffles, compounding ~3x per
-    iteration — measured 40s → 9s on the sf0.1 WCC when fixed). Vertex
-    state is orders of magnitude smaller than the edge set, so the
-    materialization is cheap relative to the superstep's edge shuffle.
-    On a multi-node cluster, swap localCheckpoint for reliable
-    ``checkpoint()`` every ~5 supersteps (executor loss safety).
-
-    ``eager``: algorithms with a per-superstep convergence probe
-    materialize every step anyway (the probe is an action). FIXED-
-    iteration algorithms (pagerank/ppr/labelprop) pass ``eager=False``
-    for intermediate steps — lineage still truncates and the persisted
-    RDD still computes exactly once (both in-superstep consumers share
-    it), but the whole chain executes as ONE job at the final eager
-    step, saving a scheduled materialization job per superstep. The
-    final step must stay eager so execution happens inside
-    ``_superstep_env``'s pinned settings.
-    """
-    return df.localCheckpoint(eager=eager)
+        return edges.select("src", "dst").distinct()
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return edges.select("src", "dst").unionByName(rev).distinct()
 
 
 def connected_components(
@@ -149,7 +53,8 @@ def connected_components(
     reachable. Converges in O(diameter) supersteps.
     """
     state = vertices.select("id", F.col("id").alias("component"))
-    with _superstep_env(edges) as sym:
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
         # Delta/frontier messaging (r12 optimization, guide §1.2 "remove
         # unnecessary shuffles and passes"): only vertices whose
         # component CHANGED last superstep need to re-broadcast it —
@@ -181,7 +86,7 @@ def connected_components(
                      ).alias("_chg"),
                 )
             )
-            new_state = _truncate(new_state, step)
+            new_state = checkpoint(new_state)
             frontier = new_state.filter("_chg").select("id", "component")
             state = new_state.select("id", "component")
             if frontier.isEmpty():
@@ -196,7 +101,8 @@ def bfs(
 
     Returns (id, dist) for reached vertices only, dist <= max_depth.
     """
-    with _superstep_env(edges) as sym:
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
         state = vertices.select(
             "id",
             F.when(F.col("id").isin(source_ids), F.lit(0)).alias("dist"),
@@ -220,7 +126,7 @@ def bfs(
             state = state.select(
                 "id", F.when(F.col("d2") < 2**31, F.col("d2")).alias("dist")
             )
-            state = _truncate(state, step)
+            state = checkpoint(state)
     return state.filter(F.col("dist").isNotNull())
 
 
@@ -238,7 +144,8 @@ def pagerank(
     """
     n = vertices.count()
     teleport = (1.0 - damping) / n
-    with _superstep_env(edges) as sym:
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
@@ -262,7 +169,7 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
-            state = _truncate(state, step, eager=(step == iterations - 1))
+            state = checkpoint(state, eager=(step == iterations - 1))
     return state.select("id", "rank")
 
 
@@ -285,10 +192,10 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     per-id work by #distinct neighbor values instead (star-fixture
     timings in SCALE.md §7).
     """
-    with _superstep_env(edges) as sym:
-        c = _truncate(
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
+        c = checkpoint(
             sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c")),
-            0,
         )
         for step in range(max_iter):
             msgs = sym.join(c, sym.dst == c.id).select(sym.src.alias("id"), "c")
@@ -314,11 +221,10 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
                 hist.groupBy("id")
                 .agg(h_of.alias("h"))
             )
-            new_c = _truncate(
+            new_c = checkpoint(
                 c.withColumnRenamed("c", "old")
                 .join(h, "id")
                 .select("id", F.least(F.col("old"), F.col("h")).alias("c"), "old"),
-                step,
             )
             converged = new_c.filter(F.col("c") != F.col("old")).isEmpty()
             c = new_c.select("id", "c")
@@ -346,7 +252,8 @@ def label_propagation(
     timings in SCALE.md §7) and drops a whole sort stage per superstep.
     """
     state = vertices.select("id", F.col("id").alias("label"))
-    with _superstep_env(edges) as sym:
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
         for step in range(iterations):
             counts = (
                 sym.join(state, sym.src == state.id)
@@ -369,7 +276,7 @@ def label_propagation(
             state = state.join(winners, "id", "left").select(
                 "id", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
             )
-            state = _truncate(state, step, eager=(step == iterations - 1))
+            state = checkpoint(state, eager=(step == iterations - 1))
     return state
 
 
@@ -387,7 +294,8 @@ def personalized_pagerank(
     Returns (id, rank).
     """
     n_src = len(source_ids)
-    with _superstep_env(edges) as sym:
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
@@ -416,7 +324,7 @@ def personalized_pagerank(
                 ).alias("rank"),
                 "teleport",
             )
-            state = _truncate(state, step, eager=(step == iterations - 1))
+            state = checkpoint(state, eager=(step == iterations - 1))
     return state.select("id", "rank")
 
 
@@ -435,46 +343,20 @@ def shortest_paths_weighted(
     symmetrization is the caller's choice. Returns (id, dist) for
     reached vertices.
     """
-    spark = weighted_edges.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    e = None
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        # Pin provisionally BEFORE .cache(): CacheManager compiles the
-        # cached plan with the conf in force at registration (and
-        # cached plans are exempt from AQE re-partitioning), so caching
-        # first would bake session-default 200-partition shuffles into
-        # the edge build (measured: 400/800-task stages on a vanilla
-        # session).
-        provisional = max(
-            4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(provisional))
-        # r12 optimization: src-partitioned cached edges (only the
-        # frontier side shuffles per round) and a DELTA frontier —
-        # only vertices whose dist improved last round re-relax; a
-        # non-improved vertex's relaxations were already emitted with
-        # identical content and min-folded, so per-round states are
-        # bit-identical to the relax-all form (classic delta
+    with superstep_loop(weighted_edges.sparkSession) as loop:
+        # DELTA frontier: only vertices whose dist improved last round
+        # re-relax; a non-improved vertex's relaxations were already
+        # emitted with identical content and min-folded, so per-round
+        # states are bit-identical to the relax-all form (classic delta
         # Bellman-Ford; oracle unchanged).
-        # r13 (ADVICE r12): materialize the projected edges ONCE
-        # before counting — the sizing count used to run on the
-        # un-checkpointed input lineage and the cache materialization
-        # re-ran it, computing a caller-supplied derived frame twice.
-        proj = weighted_edges.select("src", "dst", "w").localCheckpoint(eager=True)
-        n_sized = max(4, min(provisional, proj.count() // 250_000 + 1))
-        conf.set("spark.sql.shuffle.partitions", str(n_sized))
-        e = proj.repartition(n_sized, "src").cache()
-        state = _truncate(
+        e = loop.keyed(weighted_edges.select("src", "dst", "w"), "src")
+        state = checkpoint(
             vertices.select(
                 "id",
                 F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias(
                     "dist"
                 ),
             ),
-            0,
         )
         frontier = state.filter(F.col("dist").isNotNull())
         for step in range(max_iter):
@@ -483,7 +365,7 @@ def shortest_paths_weighted(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min(F.col("dist") + F.col("w")).alias("msg"))
             )
-            new_state = _truncate(
+            new_state = checkpoint(
                 state.withColumnRenamed("dist", "old")
                 .join(msgs, "id", "left")
                 .select(
@@ -499,7 +381,6 @@ def shortest_paths_weighted(
                     F.when(F.col("d2") < 2**62, F.col("d2")).alias("dist"),
                     "old",
                 ),
-                step,
             )
             frontier = new_state.filter(
                 F.col("dist").eqNullSafe(F.col("old")) == F.lit(False)
@@ -508,11 +389,6 @@ def shortest_paths_weighted(
             state = new_state.select("id", "dist")
             if converged:
                 break
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        if e is not None:
-            e.unpersist()
     return state.filter(F.col("dist").isNotNull())
 
 
@@ -540,35 +416,15 @@ def temporal_earliest_arrival(
     state equals the n_rounds state. Sources start at arrival 0
     (before every real timestamp). Returns (id, arr) for reached
     vertices."""
-    spark = contacts.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    e = None
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        provisional = max(
-            4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(provisional))
-        # r12 optimization: the contact cache is hash-partitioned by
-        # src at the loop's pinned partition count (the symmetrize()
-        # layout contract), so each round's message join shuffles ONLY
-        # the frontier side — the contact list never moves again.
-        # r13 (ADVICE r12): materialize the projected contacts ONCE
-        # before the sizing count (see shortest_paths_weighted).
-        proj = contacts.select("src", "dst", "t").localCheckpoint(eager=True)
-        n_sized = max(4, min(provisional, proj.count() // 250_000 + 1))
-        conf.set("spark.sql.shuffle.partitions", str(n_sized))
-        e = proj.repartition(n_sized, "src").cache()
-        state = _truncate(
+    with superstep_loop(contacts.sparkSession) as loop:
+        e = loop.keyed(contacts.select("src", "dst", "t"), "src")
+        state = checkpoint(
             vertices.select(
                 "id",
                 F.when(
                     F.col("id").isin(source_ids), F.lit(0).cast("long")
                 ).alias("arr"),
             ),
-            0,
         )
         # Delta relaxation (r12 optimization): only vertices whose
         # arrival IMPROVED last round re-relax their out-contacts.
@@ -588,7 +444,7 @@ def temporal_earliest_arrival(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("t").alias("msg"))
             )
-            new_state = _truncate(
+            new_state = checkpoint(
                 state.withColumnRenamed("arr", "old")
                 .join(msgs, "id", "left")
                 .select(
@@ -604,7 +460,6 @@ def temporal_earliest_arrival(
                     F.when(F.col("a2") < 2**62, F.col("a2")).alias("arr"),
                     "old",
                 ),
-                step,
             )
             frontier = new_state.filter(
                 (F.col("arr").eqNullSafe(F.col("old")) == F.lit(False))
@@ -613,11 +468,6 @@ def temporal_earliest_arrival(
             state = new_state.select("id", "arr")
             if converged:
                 break
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        if e is not None:
-            e.unpersist()
     return state.filter(F.col("arr").isNotNull())
 
 
@@ -651,7 +501,7 @@ def pregel_run(
     - ``check_cols``: converge (stop early) when these state columns
       are unchanged for every vertex — adds one tiny probe job per
       superstep; omit for fixed-iteration algorithms (lineage then
-      executes as ONE job at the final superstep, see ``_truncate``).
+      executes as ONE job at the final superstep, see ``loop.checkpoint``).
 
     Scale posture identical to the named algorithms: edges cached
     src-partitioned once, only vertex state shuffles per superstep,
@@ -676,7 +526,8 @@ def pregel_run(
     if unknown:
         raise ValueError(f"update targets unknown state columns: {sorted(unknown)}")
     state = vertices.select("id", *state_cols)
-    with _superstep_env(edges, directed=directed) as sym:
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges, directed=directed), "src")
         for step in range(max_iter):
             msgs = (
                 sym.join(state, sym.src == state.id)
@@ -693,10 +544,8 @@ def pregel_run(
             )
             # convergence probing needs each step materialized; fixed-
             # iteration loops defer execution to the last eager step
-            new_state = _truncate(
-                new_state,
-                step,
-                eager=bool(check_cols) or step == max_iter - 1,
+            new_state = checkpoint(
+                new_state, eager=bool(check_cols) or step == max_iter - 1
             )
             if check_cols:
                 changed = (
@@ -755,11 +604,11 @@ def betweenness_sampled(
     spark = vertices.sparkSession
     roots = spark.createDataFrame([(int(s),) for s in sources], "root long")
     delta_frames: list[DataFrame] = []
-    with _superstep_env(edges) as sym:
-        lvl0 = _truncate(
+    with superstep_loop(edges.sparkSession) as loop:
+        sym = loop.keyed(symmetrize(edges), "src")
+        lvl0 = checkpoint(
             roots.join(vertices, roots.root == vertices.id)
             .select("root", "id", F.lit(1).cast("long").alias("sigma")),
-            0,
         )
         if lvl0.isEmpty():
             return vertices.select("id", F.lit(0.0).alias("betweenness"))
@@ -774,11 +623,11 @@ def betweenness_sampled(
                 .groupBy("root", "id")
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            nxt = _truncate(msgs, d)
+            nxt = checkpoint(msgs)
             if nxt.isEmpty():
                 break
             levels.append(nxt)
-            visited = _truncate(visited.unionByName(nxt.select("root", "id")), d)
+            visited = checkpoint(visited.unionByName(nxt.select("root", "id")))
         # backward dependency pass, deepest level first
         delta_d: DataFrame | None = None
         for d in range(len(levels) - 1, 0, -1):
@@ -807,7 +656,7 @@ def betweenness_sampled(
                     "root", "id", (F.col("sigma") * F.col("msum")).alias("delta")
                 )
             )
-            delta_d = _truncate(contrib, d)
+            delta_d = checkpoint(contrib)
             if d > 1:  # deltas FOR level d-1; level 0 is the root itself
                 delta_frames.append(delta_d.select("id", "delta"))
     if not delta_frames:
@@ -863,56 +712,44 @@ def hits(edges: DataFrame, iterations: int = 20) -> DataFrame:
     float-sum ordering is nondeterministic run to run as before —
     rows-only key, tolerance-pinned goldens).
     """
-    assert iterations >= 1, "hits needs at least one superstep"
-    with _superstep_env(edges, directed=True) as dir_edges:
-        n_part = dir_edges.rdd.getNumPartitions()
-        by_dst = dir_edges.repartition(n_part, "dst").cache()
-        try:
-            verts = (
-                dir_edges.select(F.col("src").alias("id"))
-                .unionByName(dir_edges.select(F.col("dst").alias("id")))
-                .distinct()
-                .localCheckpoint()
+    if iterations < 1:
+        raise ValueError(f"hits needs at least one superstep, got {iterations}")
+    with superstep_loop(edges.sparkSession) as loop:
+        dir_edges = loop.keyed(symmetrize(edges, directed=True), "src")
+        by_dst = loop.cache(dir_edges.repartition(loop.partitions, "dst"))
+        verts = (
+            dir_edges.select(F.col("src").alias("id"))
+            .unionByName(dir_edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .localCheckpoint()
+        )
+        hub = verts.select("id", F.lit(1.0).alias("hub"))
+        auth = None
+        norm = F.coalesce(
+            F.when(F.col("t") != 0, F.col("raw") / F.col("t")), F.lit(0.0)
+        )
+        for _step in range(iterations):
+            araw = checkpoint(
+                dir_edges.join(hub.select(F.col("id").alias("src"), "hub"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("hub").alias("raw"))
             )
-            hub = verts.select("id", F.lit(1.0).alias("hub"))
-            auth = None
-            norm = F.coalesce(
-                F.when(F.col("t") != 0, F.col("raw") / F.col("t")), F.lit(0.0)
+            t_a = araw.agg(F.sum("raw").alias("t"))
+            auth = araw.crossJoin(F.broadcast(t_a)).select("id", norm.alias("auth"))
+            hraw = checkpoint(
+                by_dst.join(auth.select(F.col("id").alias("dst"), "auth"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("auth").alias("raw"))
             )
-            for _step in range(iterations):
-                araw = (
-                    dir_edges.join(
-                        hub.select(F.col("id").alias("src"), "hub"), "src"
-                    )
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.sum("hub").alias("raw"))
-                    .localCheckpoint(eager=True)
-                )
-                t_a = araw.agg(F.sum("raw").alias("t"))
-                auth = araw.crossJoin(F.broadcast(t_a)).select(
-                    "id", norm.alias("auth")
-                )
-                hraw = (
-                    by_dst.join(
-                        auth.select(F.col("id").alias("dst"), "auth"), "dst"
-                    )
-                    .groupBy(F.col("src").alias("id"))
-                    .agg(F.sum("auth").alias("raw"))
-                    .localCheckpoint(eager=True)
-                )
-                t_h = hraw.agg(F.sum("raw").alias("t"))
-                hub = hraw.crossJoin(F.broadcast(t_h)).select(
-                    "id", norm.alias("hub")
-                )
-            return (
-                verts.join(hub, "id", "left")
-                .join(auth, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                    F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
-                )
-                .localCheckpoint()
+            t_h = hraw.agg(F.sum("raw").alias("t"))
+            hub = hraw.crossJoin(F.broadcast(t_h)).select("id", norm.alias("hub"))
+        return (
+            verts.join(hub, "id", "left")
+            .join(auth, "id", "left")
+            .select(
+                "id",
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
             )
-        finally:
-            by_dst.unpersist()
+            .localCheckpoint()
+        )

@@ -14,8 +14,6 @@ lineage checkpointing.
 
 from __future__ import annotations
 
-from contextlib import contextmanager as _contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from ezbake_graph_spark.graph import (
     label_propagation,
     pagerank,
 )
+from ezbake_graph_spark.graph.loop import SuperstepLoop, checkpoint, superstep_loop
 from ezbake_graph_spark.registry import register
 
 # Shared DuckDB CTEs for the bipartite graph in unified id space.
@@ -48,31 +47,6 @@ def bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.col("l_partkey")).alias("src"),
         (2 * F.col("l_suppkey") + 1).alias("dst"),
     ).distinct()
-
-
-@_contextmanager
-def _pinned_loop_env(spark: SparkSession):
-    """Scoped settings for the hand-rolled fixed-iteration integer
-    loops (exact PageRank/PPR), mirroring graph/pregel.py's
-    ``_superstep_env``: AQE off (nothing to re-plan in a fixed tiny
-    shuffle, and its per-stage planning jobs multiply across 10
-    supersteps), shuffle partitions pinned small (edge-volume scaled,
-    clamped to cluster parallelism at 100 TB). The loop must
-    MATERIALIZE its result (eager localCheckpoint) before the context
-    exits — execution after restore would run at session settings."""
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    prev_p = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(4, min(int(prev_p), spark.sparkContext.defaultParallelism) // 4)),
-    )
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_p)
 
 
 def graph_vertices(edges: DataFrame) -> DataFrame:
@@ -811,9 +785,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(edges.alias("e"), F.col("r.dst") == F.col("e.src"))
             .select(F.col("r.src").alias("src"), F.col("e.dst").alias("dst"))
         )
-        reach = (
-            reach.unionByName(extended).distinct().localCheckpoint()
-        )
+        reach = checkpoint(reach.unionByName(extended).distinct())
         n_next = reach.count()
         if n_next == n_reach:
             break
@@ -898,11 +870,8 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("r.d") + 1).alias("d"),
             )
         )
-        dist = (
-            dist.unionByName(extended)
-            .groupBy("src", "dst")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
+        dist = checkpoint(
+            dist.unionByName(extended).groupBy("src", "dst").agg(F.min("d").alias("d"))
         )
         stats = dist.agg(
             F.count(F.lit(1)).alias("n"), F.sum("d").alias("s")
@@ -1052,10 +1021,10 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so no dangling-mass term is needed.
 
     Loop mechanics (round-5 tune, 6.3 s → 2.9 s first-run at sf0.01):
-    runs under ``_pinned_loop_env`` (AQE off + small pinned shuffle),
+    runs under ``superstep_loop`` (AQE off + small pinned shuffle),
     mid-loop checkpoints LAZY (lineage truncation without a
     materialization job each — the whole 10-step chain executes as one
-    job at the closing eager checkpoint, inside the pinned env).
+    job at the closing eager checkpoint, inside the pinned loop).
 
     r12 optimization (guide §2.4 "two operations keyed the same way
     share one exchange"): the per-superstep ``state ⨝ deg`` join is
@@ -1063,37 +1032,25 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set ONCE (``sym_d``), and ``sym_d`` is cached repartitioned
     by ``src`` at the loop's pinned partition count, so every
     superstep's message join shuffles ONLY the vertex-state side —
-    the |E|-row edge relation never moves again (the same layout
-    contract as graph/pregel.py ``symmetrize``). The per-edge share
+    the |E|-row edge relation never moves again (the layout contract
+    of ``SuperstepLoop.keyed``). The per-edge share
     is the identical integer ``r div d``; results are bit-identical
     (same value-hash oracle)."""
-    with _pinned_loop_env(spark):
+    with superstep_loop(spark) as loop:
         edges = bipartite_edges(spark, sf_dir)
         sym = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # Loop-scoped cache, unpersisted after the closing eager
-        # checkpoint (VERDICT r12 #8 / ADVICE r12: the r12 form was
-        # never unpersisted, so each distinct plan left a resident
-        # edge relation for the session's lifetime AND runs 2..N of a
-        # min-of-N bench were served the decorate+repartition for free
-        # by the CacheManager — honest per-run attribution requires
-        # every run to pay it). r13 build shape (guide §2.4 "share one
-        # exchange"): the degree is a count(*) WINDOW over the src
-        # partitioning the cache needs anyway — ONE exchange, vs the
-        # old deg-aggregate + join + repartition (three). Window per
-        # src = same per-task row placement the src layout already
-        # imposes; exact integer count, bit-identical ranks
+        # The degree is a count(*) WINDOW over the src partitioning the
+        # cache needs anyway — ONE exchange, vs a deg-aggregate + join +
+        # repartition (three); exact integer count, bit-identical ranks
         # (same-session A/B: 3.66 → 3.22 s, rows equal).
-        sym_d = (
-            sym.repartition(n_part, "src")
-            .select(
+        sym_d = loop.cache(
+            sym.repartition(loop.partitions, "src").select(
                 "src",
                 "dst",
                 F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
             )
-            .cache()
         )
         state = (
             sym.select(F.col("src").alias("id")).distinct()
@@ -1115,12 +1072,10 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if i % 3 == 2:
-                state = state.localCheckpoint(eager=False)
-        out = state.select(
+                state = checkpoint(state, eager=False)
+        return state.select(
             "id", (F.col("r").cast("double") / 1_000_000).alias("rank")
         ).orderBy("id").localCheckpoint()
-        sym_d.unpersist()
-        return out
 
 
 def _ppr_exact_sql(seed: int = 1, iterations: int = 10) -> str:
@@ -1175,29 +1130,20 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring with a full value-hash oracle. Vertices never reached keep
     rank 0 and are filtered, mirroring sparse PPR at scale (frontier
     stays small; state ∝ touched vertices, not |V|). Same loop
-    mechanics as graph_pagerank_exact: pinned env, one-time deg
-    checkpoint, lazy mid-loop checkpoints, eager closing checkpoint."""
-    with _pinned_loop_env(spark):
+    mechanics as graph_pagerank_exact: pinned loop, degree folded onto
+    the src-partitioned cached edge set, lazy mid-loop checkpoints,
+    eager closing checkpoint."""
+    with superstep_loop(spark) as loop:
         edges = bipartite_edges(spark, sf_dir)
         sym = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # r12: degree folded onto the src-partitioned cached edge set —
-        # one join per superstep instead of two, edge relation never
-        # re-shuffled (same move as graph_pagerank_exact; shares are
-        # the identical integer r div d). r13: loop-scoped cache
-        # (unpersisted after the closing eager checkpoint, VERDICT r12
-        # #8) and the one-exchange window-count build — see
-        # graph_pagerank_exact.
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        sym_d = (
-            sym.repartition(n_part, "src")
-            .select(
+        sym_d = loop.cache(
+            sym.repartition(loop.partitions, "src").select(
                 "src",
                 "dst",
                 F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
             )
-            .cache()
         )
         verts = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
         state = verts.withColumn(
@@ -1222,15 +1168,13 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if i % 3 == 2:
-                state = state.localCheckpoint(eager=False)
-        out = (
+                state = checkpoint(state, eager=False)
+        return (
             state.filter(F.col("r") > 0)
             .select("id", (F.col("r").cast("double") / 1_000_000).alias("rank"))
             .orderBy(F.col("rank").desc(), "id")
             .localCheckpoint()
         )
-        sym_d.unpersist()
-        return out
 
 
 _WALK_STEPS = 4
@@ -1345,14 +1289,14 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             16,
             10,
         ).cast("long")
-        nxt = (
+        # truncate: hop t's frontier is consumed by hop t+1 AND the
+        # closing union; without the checkpoint the union replays a
+        # t-join-deep lineage per step (frontier is #walks rows)
+        nxt = checkpoint(
             state.join(ranked, state.node == ranked.src)
             .filter(F.col("rnk") == 1 + (h % F.col("deg")))
-            .select("walk_id", F.col("dst").alias("node"))
-            # truncate: hop t's frontier is consumed by hop t+1 AND the
-            # closing union; without the checkpoint the union replays a
-            # t-join-deep lineage per step (frontier is #walks rows)
-            .localCheckpoint(eager=False)
+            .select("walk_id", F.col("dst").alias("node")),
+            eager=False,
         )
         out = out.unionByName(nxt.withColumn("step", F.lit(t)))
         state = nxt
@@ -1785,12 +1729,11 @@ def graph_betweenness_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     level = und.select("src", "dst", F.lit(1).cast("long").alias("cnt"))
     walks = level.withColumn("d", F.lit(1))
     for d in range(2, _BETWEENNESS_DEPTH + 1):
-        level = (
+        level = checkpoint(
             level.alias("w")
             .join(und.alias("e"), F.col("w.dst") == F.col("e.src"))
             .groupBy(F.col("w.src").alias("src"), F.col("e.dst").alias("dst"))
             .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint()  # keep the unrolled-join lineage flat
         )
         walks = walks.unionByName(level.withColumn("d", F.lit(d)))
     dist = (
@@ -1929,15 +1872,14 @@ def graph_path_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat("path", F.array(F.col("dst"))).alias("path"),
             )
         )
-        frontier = (
+        frontier = checkpoint(
             ext.join(best.select("node"), "node", "left_anti")
             .groupBy("node")
             .agg(F.lit(depth).alias("d"), F.min("path").alias("path"))
-            .localCheckpoint()
         )
         if not frontier.take(1):
             break
-        best = best.unionByName(frontier).localCheckpoint()
+        best = checkpoint(best.unionByName(frontier))
     return best.select(
         "node",
         "d",
@@ -2016,79 +1958,32 @@ def louvain_local_moves(
 
     # Weighted graphs use the same integer algebra: strength replaces
     # degree, sum(w) replaces count(*) — weights must be BIGINT (scale
-    # rational weights first, micro-unit style).
-    #
-    # Loop-scoped execution pin (the _superstep_env posture, inlined
-    # because symmetrize() would drop the weight column): AQE off and
-    # shuffle partitions sized to the edge volume for the WHOLE round
-    # loop — every round re-runs the same fixed small shuffles, so
-    # AQE's re-planning jobs and session-width reduce stages are pure
-    # per-round overhead (measured 331 s -> 159 s on the 80-node
-    # planted hierarchy test, 2x on the sf0.01 keys; identical integer
-    # trajectory, settings restored on exit). Edges cache
-    # dst-partitioned once so each round's kic join reuses the layout
-    # and only the small label frame shuffles.
-    spark = edges_sym.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    provisional = max(
-        4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-    )
-    conf.set("spark.sql.shuffle.partitions", str(provisional))
-    ew = edges_sym.select(
-        "src",
-        "dst",
-        (
-            F.col(weight_col).cast("long")
-            if weight_col is not None
-            else F.lit(1).cast("long")
-        ).alias("_w"),
-    )
-    try:
-        # r13 (the ADVICE r12 pregel fix, applied here too): materialize
-        # the projected arcs ONCE before the sizing count — previously
-        # the count executed the caller's arc frame and the cache
-        # materialization re-executed it. For louvain_two_level's
-        # coarse level that frame is the whole coarsen chain (two label
-        # joins + agg over the raw edge list), so the double-compute
-        # was a full extra pass. The cache below is built over the
-        # checkpointed RDD, so its InMemoryRelation stats (and every
-        # in-loop join strategy) are the real materialized sizes.
-        ew = ew.localCheckpoint(eager=True)
-        n_part = max(4, min(provisional, ew.count() // 250_000 + 1))
-        conf.set("spark.sql.shuffle.partitions", str(n_part))
-        ew = ew.repartition(n_part, "dst").cache()
-        return _louvain_rounds(ew, rounds, schedule)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        ew.unpersist()
+    # rational weights first, micro-unit style). Arcs are laid out
+    # dst-keyed so each round's kic join reuses the layout and only the
+    # small label frame shuffles (the pinned loop measured 331 s -> 159 s
+    # on the 80-node planted hierarchy test, 2x on the sf0.01 keys).
+    w = F.col(weight_col) if weight_col is not None else F.lit(1)
+    with superstep_loop(edges_sym.sparkSession) as loop:
+        ew = loop.keyed(
+            edges_sym.select("src", "dst", w.cast("long").alias("_w")), "dst"
+        )
+        return _louvain_rounds(loop, ew, rounds, schedule)
 
 
-def _louvain_rounds(ew: DataFrame, rounds: int, schedule: str) -> DataFrame:
-    """The local-move round loop over a cached weighted arc frame —
-    body of ``louvain_local_moves`` (see its contract), split out so
-    the conf pin/restore wraps exactly the executed region."""
-    # r13 (guide §1.2, VERDICT r12 #6): ``deg`` and ``m2`` are loop
-    # INVARIANTS, but as lazy frames they re-aggregated from the edge
-    # cache on every reference — deg twice per round (community totals
-    # + the gain join) and m2 once per round as a fresh
-    # BroadcastExchange build. Loop-scoped ``.cache()`` (unpersisted by
-    # the caller's finally via ``_louvain_caches``) computes each once;
-    # cache — not localCheckpoint — because an ExistingRDD would reset
-    # sizeInBytes to the default and knock the small deg relation out
-    # of the per-round broadcast join (measured: the checkpoint form
-    # REGRESSED graph_louvain 9.2 → 10.8 s at sf0.1). Values are exact
-    # integer sums — bit-identical trajectory (same value-hash
-    # oracles).
-    deg = (
-        ew.groupBy(F.col("src").alias("id"))
-        .agg(F.sum("_w").alias("deg"))
-        .cache()
-    )
-    m2 = ew.agg(F.sum("_w").alias("m2")).cache()
+def _louvain_rounds(
+    loop: SuperstepLoop, ew: DataFrame, rounds: int, schedule: str
+) -> DataFrame:
+    """The local-move round loop over a keyed weighted arc frame —
+    body of ``louvain_local_moves`` (see its contract)."""
+    # ``deg`` and ``m2`` are loop INVARIANTS: as lazy frames they
+    # re-aggregated from the edge cache on every reference (deg twice
+    # per round, m2 once per round as a fresh BroadcastExchange build).
+    # Loop-scoped cache — not a checkpoint — because a checkpoint's
+    # LogicalRDD reports the default sizeInBytes and knocks the small
+    # deg relation out of the per-round broadcast join (measured: the
+    # checkpoint form REGRESSED graph_louvain 9.2 → 10.8 s at sf0.1).
+    deg = loop.cache(ew.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("deg")))
+    m2 = loop.cache(ew.agg(F.sum("_w").alias("m2")))
     cm = deg.select("id", F.col("id").alias("label"))
     for r in range(rounds):
         tot = (
@@ -2188,12 +2083,7 @@ def _louvain_rounds(ew: DataFrame, rounds: int, schedule: str) -> DataFrame:
                 .alias("label"),
             )
         )
-        cm = cm.localCheckpoint(eager=True)
-    # loop-scoped caches: the returned cm is materialized (eager
-    # checkpoint), so the invariants can be dropped here — bounded
-    # memory, honest per-run attribution (VERDICT r12 #8)
-    deg.unpersist()
-    m2.unpersist()
+        cm = checkpoint(cm)
     return cm.select("id", F.col("label").alias("community"))
 
 
@@ -2546,7 +2436,7 @@ def louvain_hierarchy(
                 )
                 .select("id", "community")
             )
-        mem = mem.localCheckpoint(eager=True)
+        mem = checkpoint(mem)
         intra = (
             base.join(
                 mem.select(F.col("id").alias("src"), F.col("community").alias("ca")),
@@ -2581,7 +2471,7 @@ def louvain_hierarchy(
         )
         out = lvl_df if out is None else out.unionByName(lvl_df)
         if lvl < max_levels:
-            g = (
+            g = checkpoint(
                 g.join(
                     labels.select(
                         F.col("id").alias("src"), F.col("community").alias("cs")
@@ -2596,7 +2486,6 @@ def louvain_hierarchy(
                 )
                 .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
                 .agg(F.sum("_w").alias("_w"))
-                .localCheckpoint(eager=True)
             )
     assert out is not None
     return out
@@ -2611,7 +2500,8 @@ def _louvain_hierarchy_sql(
     an emission gate — level k rows appear iff q strictly increased at
     every coarse level up to k, the exact integer rule the Spark loop
     applies by breaking at the first non-improving level."""
-    assert max_levels == 3, "oracle unrolled for exactly 3 levels"
+    if max_levels != 3:
+        raise ValueError(f"oracle unrolled for exactly 3 levels, got {max_levels}")
     l1 = _louvain_rounds_sql(rounds, "cm", "sym", "deg", "mm", False)
     l2 = _louvain_rounds_sql(
         rounds, "dm", "ce2", "deg2", "mm2", True, schedule="updown"
@@ -2803,18 +2693,14 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so only superstep 1's raw (n_parts * 1e6) binds: safe below ~9e12
     parts; pre-scale the init mass beyond that (chi2-style caveat).
     """
-    with _pinned_loop_env(spark):
+    with superstep_loop(spark) as loop:
         edges = bipartite_edges(spark, sf_dir).localCheckpoint()
-        # r13 (guide §2.4 / the pregel.hits posture): both half-step
-        # joins co-locate against a resident layout — edges cached
-        # src-partitioned AND dst-partitioned at the pinned count, so
-        # only the score side ever shuffles. Unpersisted on exit
-        # (VERDICT r12 #8): the result is materialized by the closing
-        # eager checkpoint, so every run pays the decorate cost
-        # honestly.
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        by_src = edges.repartition(n_part, "src").cache()
-        by_dst = edges.repartition(n_part, "dst").cache()
+        # The pregel.hits posture: both half-step joins co-locate
+        # against a resident layout — edges cached src-partitioned AND
+        # dst-partitioned at the pinned count, so only the score side
+        # ever shuffles.
+        by_src = loop.cache(edges.repartition(loop.partitions, "src"))
+        by_dst = loop.cache(edges.repartition(loop.partitions, "dst"))
         verts = (
             edges.select(F.col("src").alias("id"))
             .unionByName(edges.select(F.col("dst").alias("id")))
@@ -2823,39 +2709,32 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         hub = verts.select("id", F.lit(1_000_000).cast("long").alias("h"))
         auth = None
         for i in range(HITS_EXACT_ITERS):
-            # r13 (guide §1.2, VERDICT r12 #5): checkpoint each RAW
-            # half-step sum eagerly. Before, only the full superstep's
-            # ``hub`` checkpointed, so each L1 total's
-            # BroadcastExchange build re-executed the half-step chain
-            # it normalized and the second half-step re-executed the
-            # first — ~3 executions of every keyed shuffle per
-            # superstep (the old comment documented the bound; now
-            # each half-step executes ONCE and the broadcast builds
-            # scan a materialized RDD). Integer arithmetic throughout,
-            # so values are bit-identical (same value-hash oracle).
-            araw = (
+            # Each RAW half-step sum is checkpointed eagerly, so each L1
+            # total's BroadcastExchange build and the next half-step
+            # scan a materialized RDD instead of re-executing the chain
+            # (~3 executions of every keyed shuffle per superstep
+            # otherwise).
+            araw = checkpoint(
                 by_src.join(hub.select(F.col("id").alias("src"), "h"), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("h").alias("raw"))
-                .localCheckpoint(eager=True)
             )
             t_a = araw.agg(F.sum("raw").alias("t"))
             auth = (
                 araw.crossJoin(F.broadcast(t_a))
                 .select("id", F.expr("(raw * 1000000) div t").alias("a"))
             )
-            hraw = (
+            hraw = checkpoint(
                 by_dst.join(auth.select(F.col("id").alias("dst"), "a"), "dst")
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.sum("a").alias("raw"))
-                .localCheckpoint(eager=True)
             )
             t_h = hraw.agg(F.sum("raw").alias("t"))
             hub = (
                 hraw.crossJoin(F.broadcast(t_h))
                 .select("id", F.expr("(raw * 1000000) div t").alias("h"))
             )
-        out = (
+        return (
             verts.join(hub, "id", "left")
             .join(auth.withColumnRenamed("a", "a_"), "id", "left")
             .select(
@@ -2872,9 +2751,6 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id")
             .localCheckpoint()
         )
-        by_src.unpersist()
-        by_dst.unpersist()
-        return out
 
 
 # ---------------------------------------------------------------------------
@@ -3102,45 +2978,13 @@ _TRUSS_K = 4
 _TRUSS_ROUNDS = 24  # measured peeling depth 2/17/4 at sf0.001/0.01/0.1
 
 
-
-def _checkpoint_reset_stats(df: DataFrame) -> DataFrame:
-    """localCheckpoint + STATISTICS reset — required in any loop whose
-    superstep multiplies plan-size estimates, i.e. 2+ self-joins per
-    round. ``Dataset.localCheckpoint`` truncates lineage but INHERITS
-    the parent plan's ``sizeInBytes`` into the new LogicalRDD, and the
-    size-only join estimator multiplies child sizes — so a round with
-    J joins makes size_{n+1} ~ size_n^(J+1). The BigInteger's DIGIT
-    count then grows (J+1)x per round and the driver disappears into
-    Karatsuba/Toom-Cook multiplications: measured on the 4-truss loop
-    (3 self-joins/round), rounds 0-11 ran 0.4-1.6 s and rounds
-    12/13/14 ran 6/25/127 s with a CONSTANT 33-char logical plan and
-    SHRINKING data — jstack pinned 107 s of the 115-s wall on
-    ``java.math.BigInteger.multiply``. Two-join loops (WCC, SSSP)
-    square per round and stay under the radar only because they
-    converge in <= ~10 rounds (19 x 2^10 digits is still cheap) —
-    the hazard is latent there, structural here.
-
-    The reset rebuilds a LogicalRDD over the SAME materialized
-    partitions without the inherited stats (back to
-    ``defaultSizeInBytes``), so estimates stay constant-size forever.
-    Everything remains JVM-side and distributed — no python round
-    trip."""
-    ck = df.localCheckpoint(eager=True)
-    jdf = ck._jdf
-    spark = df.sparkSession
-    jds = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
-    )
-    return DataFrame(jds, spark)
-
-
 def _truss_sql(rounds: int = _TRUSS_ROUNDS, k: int = _TRUSS_K) -> str:
     """Unrolled-CTE oracle for k-truss peeling: per round, edge
     support = common-neighbor count over the CURRENT edge set; keep
     edges with support >= k-2; repeat. Peeling is idempotent once
     stable, so ``rounds`` overshoots the measured fixpoint the same
-    way _sssp_sql does — a deeper peel on future data fails the
-    verify hash loudly, never silently."""
+    way _sssp_sql does; a peel deeper than ``rounds`` stops at the same
+    capped round in both engines."""
     parts = []
     for i in range(rounds):
         parts.append(
@@ -3200,7 +3044,8 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two keyed joins + one agg over the current edge set), drop
     edges under k-2, stop when stable — measured depth 2/17/4 at
     sf0.001/0.01/0.1, loop capped at the oracle's 24-round unroll
-    (overshoot idempotent; deeper data fails the hash loudly). At
+    (overshoot idempotent; the output is the support of round
+    min(converged, 23), exactly what the unroll emits). At
     100 TB each round is the standard triangle-enumeration shuffle
     bounded by current-edge adjacency, and rounds-to-stable is the
     usual truss-decomposition trade documented in the literature —
@@ -3241,68 +3086,28 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     edges = eall.filter(keep)
-    with _pinned_loop_env(spark):
-        cur = _checkpoint_reset_stats(edges)
+    with superstep_loop(spark):
+        # Each round's checkpoint carries the support column, so the
+        # converged output is read from the materialized frame instead
+        # of re-running both triangle joins.
+        cur = checkpoint(edges)
         n_cur = cur.count()
-        sup = None
         for _ in range(_TRUSS_ROUNDS):
-            sym = cur.select(
-                F.col("a").alias("u"), F.col("b").alias("v")
-            ).unionByName(
-                cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
+            ab = cur.select("a", "b")
+            sym = ab.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+                ab.select(F.col("b").alias("u"), F.col("a").alias("v"))
             )
             x = sym.select(F.col("u").alias("xa"), F.col("v").alias("wx"))
             y = sym.select(F.col("u").alias("yb"), F.col("v").alias("wy"))
-            sup = (
-                cur.join(x, cur.a == x.xa)
-                .join(y, (cur.b == F.col("yb")) & (F.col("wy") == F.col("wx")))
-                .groupBy("a", "b")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
-            nxt = _checkpoint_reset_stats(
-                sup.filter(F.col("support") >= _TRUSS_K - 2).select("a", "b")
-            )
-            n_nxt = nxt.count()
-            if n_nxt == n_cur:
-                converged = True
-                cur = nxt
-                break
-            cur, n_cur = nxt, n_nxt
-        else:
-            converged = False
-        if converged:
-            # r13 (guide §1.2 "don't compute things twice"): on the
-            # convergence round, ``sup`` was computed over a set C with
-            # nxt = {e in C : sup(e) >= k-2} and |nxt| == |C| — so
-            # nxt == C IS the stable set and ``sup`` already holds its
-            # support. Re-running the two triangle joins just to decorate
-            # the output re-paid a full peeling round (~1/(depth+1) of
-            # the key). The filter below re-emits exactly the recompute's
-            # rows (oracle hash unchanged).
-            out = (
-                sup.filter(F.col("support") >= _TRUSS_K - 2)
-                .orderBy("a", "b")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # rounds exhausted without a fixpoint (never on committed
-            # data: depth 2/17/4 vs the 24-round cap): the last sup was
-            # computed over the PRE-peel set, so the stable support must
-            # be recomputed over the final cur
-            sym = cur.select(
-                F.col("a").alias("u"), F.col("b").alias("v")
-            ).unionByName(
-                cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-            )
-            x = sym.select(F.col("u").alias("xa"), F.col("v").alias("wx"))
-            y = sym.select(F.col("u").alias("yb"), F.col("v").alias("wy"))
-            out = (
-                cur.join(x, cur.a == x.xa)
-                .join(y, (cur.b == F.col("yb")) & (F.col("wy") == F.col("wx")))
+            cur = checkpoint(
+                ab.join(x, ab.a == x.xa)
+                .join(y, (ab.b == F.col("yb")) & (F.col("wy") == F.col("wx")))
                 .groupBy("a", "b")
                 .agg(F.count(F.lit(1)).alias("support"))
                 .filter(F.col("support") >= _TRUSS_K - 2)
-                .orderBy("a", "b")
-                .localCheckpoint(eager=True)
             )
-    return out
+            n_nxt = cur.count()
+            if n_nxt == n_cur:
+                break
+            n_cur = n_nxt
+        return cur.orderBy("a", "b").localCheckpoint(eager=True)

@@ -1403,7 +1403,8 @@ def _deletion_sigs(name: str = "name", k: int = ER_WEAK_DIST):
     the ER_SIG_PREFIX-char prefix, bounding the signature count for
     adversarially long names (see ER_SIG_PREFIX note); the levenshtein
     verify always runs on the FULL name, so precision is unaffected."""
-    assert k == 2, "deletion-signature expansion is written for k=2"
+    if k != 2:
+        raise ValueError(f"deletion-signature expansion is written for k=2, got {k}")
     s = f"substring({name}, 1, {ER_SIG_PREFIX})"
     d1 = (
         f"transform(sequence(1, length({s})), i -> "

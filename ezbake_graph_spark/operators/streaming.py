@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +27,7 @@ from ezbake_graph_spark.determinism import (
     money_sum_expr,
     sql_money_sum,
 )
+from ezbake_graph_spark.graph.loop import SHUFFLE_PARTITIONS, scoped_conf
 from ezbake_graph_spark.registry import register
 
 _STREAM_TMP = "/tmp/ezgs_stream"
@@ -219,19 +219,6 @@ def _take_stream_partitions(spark: SparkSession) -> int:
     return max(4, min(spark.sparkContext.defaultParallelism, need))
 
 
-@contextmanager
-def _stream_shuffle_conf(spark: SparkSession):
-    """Scope the size-picked streaming partition count to one query
-    start; the session's batch shuffle setting is restored after."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(_take_stream_partitions(spark)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
     path = _events_stream_dir(spark, sf_dir, copies)
     _PENDING_SRC_BYTES[0] += _dir_bytes(path)
@@ -242,7 +229,7 @@ def _read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> Da
 def _run_to_memory(spark, sdf, name: str, output_mode: str) -> DataFrame:
     qname = f"ezgs_{name}_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(_STREAM_TMP, "ckpt", qname)
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             sdf.writeStream.format("memory")
             .queryName(qname)
@@ -295,7 +282,7 @@ def stream_sink_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             sdf.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
@@ -539,7 +526,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             tracked.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
@@ -680,7 +667,7 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(mv_dir)
         os.rename(tmp, mv_dir)
 
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             sdf.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", ckpt)
@@ -811,7 +798,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(state_dir)
         os.rename(tmp, state_dir)
 
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             sdf.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)
@@ -907,7 +894,7 @@ def stream_topk_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(state_dir)
         os.rename(tmp, state_dir)
 
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             sdf.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", ckpt)
@@ -971,7 +958,7 @@ def scan_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "micro_value"
         ),
     )
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             agg.writeStream.outputMode("complete")
             .format("noop")
@@ -1110,7 +1097,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _stream_shuffle_conf(spark):
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: _take_stream_partitions(spark)}):
         q = (
             tracked.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)

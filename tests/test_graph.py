@@ -1068,3 +1068,17 @@ def test_ktruss_python_twin(spark):
     assert set(got) == edges
     for e, s in got.items():
         assert s == sup[e] and s >= 2
+
+
+def test_ktruss_round_cap_matches_unrolled_oracle(spark, duck, monkeypatch):
+    """A peel deeper than the round cap emits the support of the last
+    capped round (the converged frame carries its support column), the
+    same rows the unrolled oracle emits at that cap, instead of a
+    support recomputed over the post-cap edge set."""
+    from ezbake_graph_spark import registry
+    from ezbake_graph_spark.operators import graph as graph_ops
+
+    monkeypatch.setattr(graph_ops, "_TRUSS_ROUNDS", 1)
+    got = registry.queries()["graph_ktruss"](spark, SF_SMOKE).collect()
+    want = duck.execute(graph_ops._truss_sql(rounds=1)).fetchall()
+    assert sorted(tuple(r) for r in got) == sorted(want)
