@@ -13,15 +13,26 @@ around it does not, and lives here once:
   (~16% of superstep wall time on the sf0.1 PageRank), and an unpinned
   loop runs every group-by at the session width (sf0.01 core_number:
   23 s unpinned vs 8 s pinned on a vanilla 200-partition session).
-  Both settings are restored on exit, and every frame the loop cached
-  is unpersisted, also when a superstep raises.
+  Both settings are restored on exit, and every edge layout the loop
+  cached is unpersisted, also when a superstep raises.
 - ``SuperstepLoop.keyed``: the keyed edge layout. The edge set is
   materialized once, sized to ~250k rows per partition (clamped to the
-  pin), hash-partitioned by the join key and cached, so each
-  superstep's message join reuses that layout and only the small
-  vertex-state side shuffles.
+  pin), hash-partitioned by the join key and handed to ``layout``.
+- ``SuperstepLoop.layout``: the one way a loop holds a cached edge
+  layout: cached for the loop's lifetime and hinted ``shuffle_hash``.
+  The hint is the contract: each superstep's join against the layout
+  reuses its resident hash partitioning, so only the vertex-state side
+  shuffles. Without it the planner (AQE off, a cached layout below the
+  broadcast threshold, a state checkpoint that reports the default
+  size) broadcasts the edges instead: one extra broadcast-build job per
+  superstep join, every superstep.
 - ``checkpoint``: the per-superstep state checkpoint,
   ``localCheckpoint`` plus a statistics reset (SCALE.md §21).
+- ``observed_checkpoint``: an eager ``checkpoint`` that also returns
+  the sum of one column, read through an ``Observation`` of the same
+  job. A normalizer (HITS' L1 total, Louvain's 2m) becomes a Python
+  literal of the next superstep's plan instead of a 1-row aggregate
+  that each reference re-runs as a broadcast build job.
 
 Loop settings are session-wide: Spark keeps one SQL conf per session,
 so one loop's pin (and its restore on exit) applies to every query
@@ -34,7 +45,8 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 AQE = "spark.sql.adaptive.enabled"
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -79,11 +91,15 @@ class SuperstepLoop:
         self.partitions = partitions
         self._cached: list[DataFrame] = []
 
-    def cache(self, df: DataFrame) -> DataFrame:
-        """``df.cache()``, unpersisted when the loop exits."""
+    def layout(self, df: DataFrame) -> DataFrame:
+        """A cached edge layout (module docstring): ``df`` cached until
+        the loop exits and hinted ``shuffle_hash``, so a superstep join
+        against it is planned as a shuffled hash join on its resident
+        partitioning, never as a broadcast of it. ``df`` must already be
+        hash-partitioned by the join key at ``self.partitions``."""
         df = df.cache()
         self._cached.append(df)
-        return df
+        return df.hint("shuffle_hash")
 
     def keyed(self, edges: DataFrame, key: str) -> DataFrame:
         """Keyed edge layout: materialize ``edges`` once (so the sizing
@@ -91,9 +107,9 @@ class SuperstepLoop:
         derived frame), size the partition count to the edge volume,
         re-pin the loop's shuffle partitions to it, then hash-partition
         by ``key`` and cache (pin first: the CacheManager compiles the
-        cached plan under the conf in force when it is registered). A
-        cached frame advertises its partitioning, so every superstep's
-        join on ``key`` shuffles only the other side. A superstep runs
+        cached plan under the conf in force when it is registered). The
+        layout advertises its partitioning, so every superstep's join
+        on ``key`` shuffles only the other side. A superstep runs
         dozens of tiny stages, so over-partitioning a small graph only
         pays scheduling overhead (sf0.1 PageRank: 32 -> 8 partitions
         halved the loop)."""
@@ -102,7 +118,7 @@ class SuperstepLoop:
             4, min(self.partitions, edges.count() // _ROWS_PER_PARTITION + 1)
         )
         self._pin(SHUFFLE_PARTITIONS, self.partitions)
-        return self.cache(edges.repartition(self.partitions, key))
+        return self.layout(edges.repartition(self.partitions, key))
 
 
 @contextmanager
@@ -150,3 +166,13 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         ),
         spark,
     )
+
+
+def observed_checkpoint(df: DataFrame, column: str) -> tuple[DataFrame, int | float]:
+    """Eager ``checkpoint`` of ``df`` plus the sum of ``column`` over
+    its rows, observed in the checkpoint's own job (no extra job).
+    The sum is a Python literal; 0 for an empty frame."""
+    obs = Observation()
+    ck = checkpoint(df.observe(obs, F.sum(column).alias("total")))
+    total = obs.get["total"]
+    return ck, 0 if total is None else total

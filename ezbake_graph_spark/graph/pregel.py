@@ -26,7 +26,11 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ezbake_graph_spark.graph.loop import checkpoint, superstep_loop
+from ezbake_graph_spark.graph.loop import (
+    checkpoint,
+    observed_checkpoint,
+    superstep_loop,
+)
 
 
 def symmetrize(edges: DataFrame, directed: bool = False) -> DataFrame:
@@ -685,64 +689,81 @@ def hits(edges: DataFrame, iterations: int = 20) -> DataFrame:
     auths), matching the converged principal-eigenvector solution
     (golden-tested against a to-convergence reference iteration).
 
-    Scale: the edge set is cached TWICE, once partitioned by src and
-    once by dst, so BOTH half-step joins co-locate against a resident
-    layout and only the vertex-state side ever shuffles (the pagerank
-    posture, doubled because HITS alternates join sides). The L1
-    totals are 1-row aggregates broadcast back — no driver round trip
-    inside the lazy chain. Returns (id, hub, auth), each side summing
+    Scale: the edge set is laid out TWICE (``SuperstepLoop.layout``),
+    once partitioned by src and once by dst, so BOTH half-step joins
+    co-locate against a resident layout and only the vertex-state side
+    ever shuffles (the pagerank posture, doubled because HITS
+    alternates join sides). Returns (id, hub, auth), each side summing
     to 1.
 
-    r13 optimization (guide §1.2 "don't compute things twice" /
-    VERDICT r12 #5): each half-step's RAW grouped sum is eagerly
-    checkpointed. Before, only the full-superstep state checkpointed,
-    so each L1 total's BroadcastExchange build job re-executed the
-    half-step join+sum it normalized — and the second half-step (and
-    ITS broadcast build) re-executed the first again: ~4-6 executions
-    of every half-step chain per superstep (the same hazard
-    graph_hits_exact documents). Checkpointed raws make each broadcast
-    build and each downstream join a scan of a materialized RDD — one
-    execution per half-step (measured sf0.1: 56 s → 11.9 s for the 20
-    supersteps). Scores are also carried as per-side frames (hub on
-    src-capable vertices, auth on dst-capable) instead of a full
-    (id, hub, auth) state row per vertex — every edge endpoint is by
-    construction present in the side it consumes, and the closing
-    verts left-join restores the 0.0 rows, so the emitted values are
-    unchanged (same grouped sums, same normalization expression;
-    float-sum ordering is nondeterministic run to run as before —
-    rows-only key, tolerance-pinned goldens).
+    One Spark job per superstep. Each L1 total is observed on the
+    eager checkpoint of the raw sum it normalizes
+    (``observed_checkpoint``) and enters the next plan as a literal, so
+    no 1-row aggregate is re-run and broadcast back as a build job of
+    its own. And supersteps 1..n-1 are
+    FUSED: the hub update is scale-invariant,
+    ``normalize(A·(Aᵀh / t_a)) = normalize(A·Aᵀh)``, so each of them
+    is one plan (hub ⨝ by-src layout → raw auth sums, ⨝ by-dst layout
+    → raw hub sums) and one observed checkpoint, and the raw auth is
+    never normalized. Only the last superstep keeps its two half-steps,
+    so the emitted auth is L1-normalized too. The skipped division only
+    rescales the unnormalized hub sums: the hub entering a superstep
+    sums to 1 (all ones, |V|, before the first), so a raw auth is at
+    most 1 (in-degree) and a raw hub at most the max out-degree (times
+    the max in-degree) — no overflow or underflow in float64. The
+    emitted values equal the unfused chain's to rounding (~1e-16
+    relative). ``graph_hits_exact`` cannot fuse: its integer floor
+    divisions do not cancel.
+
+    Scores are carried as per-side frames (hub on src-capable
+    vertices, auth on dst-capable) instead of a full (id, hub, auth)
+    state row per vertex — every edge endpoint is by construction
+    present in the side it consumes, and the closing verts left-join
+    restores the 0.0 rows (also the scores when a total is 0).
+    Float-sum ordering is nondeterministic run to run — rows-only key,
+    tolerance-pinned goldens.
     """
     if iterations < 1:
         raise ValueError(f"hits needs at least one superstep, got {iterations}")
+
+    def normalized(raw: DataFrame, total: float, name: str) -> DataFrame:
+        score = F.col("raw") / F.lit(total) if total else F.lit(0.0)
+        return raw.select("id", score.alias(name))
+
     with superstep_loop(edges.sparkSession) as loop:
         dir_edges = loop.keyed(symmetrize(edges, directed=True), "src")
-        by_dst = loop.cache(dir_edges.repartition(loop.partitions, "dst"))
+        by_dst = loop.layout(dir_edges.repartition(loop.partitions, "dst"))
         verts = (
             dir_edges.select(F.col("src").alias("id"))
             .unionByName(dir_edges.select(F.col("dst").alias("id")))
             .distinct()
             .localCheckpoint()
         )
-        hub = verts.select("id", F.lit(1.0).alias("hub"))
-        auth = None
-        norm = F.coalesce(
-            F.when(F.col("t") != 0, F.col("raw") / F.col("t")), F.lit(0.0)
-        )
-        for _step in range(iterations):
-            araw = checkpoint(
+
+        def auth_raw(hub: DataFrame) -> DataFrame:
+            return (
                 dir_edges.join(hub.select(F.col("id").alias("src"), "hub"), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("hub").alias("raw"))
             )
-            t_a = araw.agg(F.sum("raw").alias("t"))
-            auth = araw.crossJoin(F.broadcast(t_a)).select("id", norm.alias("auth"))
-            hraw = checkpoint(
+
+        def hub_raw(auth: DataFrame) -> DataFrame:
+            return (
                 by_dst.join(auth.select(F.col("id").alias("dst"), "auth"), "dst")
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.sum("auth").alias("raw"))
             )
-            t_h = hraw.agg(F.sum("raw").alias("t"))
-            hub = hraw.crossJoin(F.broadcast(t_h)).select("id", norm.alias("hub"))
+
+        hub = verts.select("id", F.lit(1.0).alias("hub"))
+        for _step in range(iterations - 1):
+            hraw, t_h = observed_checkpoint(
+                hub_raw(auth_raw(hub).withColumnRenamed("raw", "auth")), "raw"
+            )
+            hub = normalized(hraw, t_h, "hub")
+        araw, t_a = observed_checkpoint(auth_raw(hub), "raw")
+        auth = normalized(araw, t_a, "auth")
+        hraw, t_h = observed_checkpoint(hub_raw(auth), "raw")
+        hub = normalized(hraw, t_h, "hub")
         return (
             verts.join(hub, "id", "left")
             .join(auth, "id", "left")

@@ -25,7 +25,12 @@ from ezbake_graph_spark.graph import (
     label_propagation,
     pagerank,
 )
-from ezbake_graph_spark.graph.loop import SuperstepLoop, checkpoint, superstep_loop
+from ezbake_graph_spark.graph.loop import (
+    SuperstepLoop,
+    checkpoint,
+    observed_checkpoint,
+    superstep_loop,
+)
 from ezbake_graph_spark.registry import register
 
 # Shared DuckDB CTEs for the bipartite graph in unified id space.
@@ -1045,7 +1050,7 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cache needs anyway — ONE exchange, vs a deg-aggregate + join +
         # repartition (three); exact integer count, bit-identical ranks
         # (same-session A/B: 3.66 → 3.22 s, rows equal).
-        sym_d = loop.cache(
+        sym_d = loop.layout(
             sym.repartition(loop.partitions, "src").select(
                 "src",
                 "dst",
@@ -1138,7 +1143,7 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        sym_d = loop.cache(
+        sym_d = loop.layout(
             sym.repartition(loop.partitions, "src").select(
                 "src",
                 "dst",
@@ -1950,47 +1955,50 @@ def louvain_local_moves(
     ``louvain_two_level``).
     Scale: per round, one keyed agg for community degree totals, one
     (src, community) agg for k_{i,C} — both map-side combinable — and
-    a per-node argmax window keyed on the node; the 1-row 2m frame is
-    a broadcast. BIGINT bound: m2*kic needs 2m * max_degree < 9.2e18
-    — at larger products pre-scale degrees (chi2-style caveat).
+    a per-node argmax group-by keyed on the node; 2m is a literal
+    observed once. One Spark job per round. BIGINT bound: m2*kic needs
+    2m * max_degree < 9.2e18 — at larger products pre-scale degrees
+    (chi2-style caveat).
     """
-    from pyspark.sql import Window
-
     # Weighted graphs use the same integer algebra: strength replaces
     # degree, sum(w) replaces count(*) — weights must be BIGINT (scale
     # rational weights first, micro-unit style). Arcs are laid out
     # dst-keyed so each round's kic join reuses the layout and only the
     # small label frame shuffles (the pinned loop measured 331 s -> 159 s
     # on the 80-node planted hierarchy test, 2x on the sf0.01 keys).
-    w = F.col(weight_col) if weight_col is not None else F.lit(1)
     with superstep_loop(edges_sym.sparkSession) as loop:
-        ew = loop.keyed(
-            edges_sym.select("src", "dst", w.cast("long").alias("_w")), "dst"
-        )
-        return _louvain_rounds(loop, ew, rounds, schedule)
+        ew = _louvain_arcs(loop, edges_sym, weight_col)
+        return _louvain_rounds(ew, rounds, schedule)
 
 
-def _louvain_rounds(
-    loop: SuperstepLoop, ew: DataFrame, rounds: int, schedule: str
+def _louvain_arcs(
+    loop: SuperstepLoop, edges_sym: DataFrame, weight_col: str | None
 ) -> DataFrame:
+    """The dst-keyed weighted arc layout (src, dst, _w BIGINT) the
+    local-move rounds join against."""
+    w = F.col(weight_col) if weight_col is not None else F.lit(1)
+    return loop.keyed(
+        edges_sym.select("src", "dst", w.cast("long").alias("_w")), "dst"
+    )
+
+
+def _louvain_rounds(ew: DataFrame, rounds: int, schedule: str) -> DataFrame:
     """The local-move round loop over a keyed weighted arc frame —
     body of ``louvain_local_moves`` (see its contract)."""
-    # ``deg`` and ``m2`` are loop INVARIANTS: as lazy frames they
-    # re-aggregated from the edge cache on every reference (deg twice
-    # per round, m2 once per round as a fresh BroadcastExchange build).
-    # Loop-scoped cache — not a checkpoint — because a checkpoint's
-    # LogicalRDD reports the default sizeInBytes and knocks the small
-    # deg relation out of the per-round broadcast join (measured: the
-    # checkpoint form REGRESSED graph_louvain 9.2 → 10.8 s at sf0.1).
-    deg = loop.cache(ew.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("deg")))
-    m2 = loop.cache(ew.agg(F.sum("_w").alias("m2")))
-    cm = deg.select("id", F.col("id").alias("label"))
+    # ``cm`` carries each node's strength ``deg`` (a loop invariant)
+    # next to its label, so no round joins a degree frame, and 2m
+    # (Σdeg) is observed on the first ``cm`` checkpoint and enters every
+    # round's score as a literal: no small invariant frame is left for
+    # the planner to re-broadcast, and each round is one planned query,
+    # one job.
+    cm, m2 = observed_checkpoint(
+        ew.groupBy(F.col("src").alias("id"))
+        .agg(F.sum("_w").alias("deg"))
+        .select("id", F.col("id").alias("label"), "deg"),
+        "deg",
+    )
     for r in range(rounds):
-        tot = (
-            cm.join(deg, "id")
-            .groupBy("label")
-            .agg(F.sum("deg").alias("tot"))
-        )
+        tot = cm.groupBy("label").agg(F.sum("deg").alias("tot"))
         # Self-loops (coarse community graphs carry them) stay OUT of
         # k_{i,C}: a node's self weight travels with it to any
         # community, so it is constant across candidates — but joined
@@ -2019,16 +2027,14 @@ def _louvain_rounds(
             .agg(F.max("kic").alias("kic"))
         )
         scored = (
-            cands.join(deg, "id")
-            .join(cm, "id")
+            cands.join(cm, "id")
             .join(tot.withColumnRenamed("label", "cand"), "cand")
-            .crossJoin(F.broadcast(m2))
             .select(
                 "id",
                 "cand",
                 "label",
                 (
-                    F.col("m2") * F.col("kic")
+                    F.lit(m2).cast("long") * F.col("kic")
                     - F.col("deg")
                     * (
                         F.col("tot")
@@ -2074,16 +2080,15 @@ def _louvain_rounds(
             if schedule == "parity"
             else F.lit(True)
         )
-        cm = (
-            cm.join(picked, "id")
-            .select(
+        cm = checkpoint(
+            cm.join(picked, "id").select(
                 "id",
                 F.when(gate, F.col("new_label"))
                 .otherwise(F.col("label"))
                 .alias("label"),
+                "deg",
             )
         )
-        cm = checkpoint(cm)
     return cm.select("id", F.col("label").alias("community"))
 
 
@@ -2264,34 +2269,31 @@ def louvain_two_level(
     costs a fraction of level 1. Returns (id, community) where
     community is the LEVEL-2 label of the node's level-1 community.
     """
-    # r13: the caller's edge frame is consumed twice (level-1 moves +
-    # the coarsen join below); for the registered keys it is a full
-    # union+distinct over the fact table — materialize it once.
-    edges_sym = edges_sym.localCheckpoint(eager=True)
-    lvl1 = louvain_local_moves(edges_sym, rounds1, weight_col)
-    w_in = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    ce = (
-        edges_sym.select("src", "dst", w_in.alias("_w"))
-        .join(
-            lvl1.select(
-                F.col("id").alias("src"), F.col("community").alias("csrc")
-            ),
-            "src",
+    # Level 1 and the coarsen join read the same keyed arc layout, so
+    # the caller's edge frame (for the registered keys a full
+    # union+distinct over the fact table) is materialized once. Level 2
+    # runs nested, while that layout is still cached; its own loop pins
+    # a partition count no larger than level 1's.
+    with superstep_loop(edges_sym.sparkSession) as loop:
+        ew = _louvain_arcs(loop, edges_sym, weight_col)
+        lvl1 = _louvain_rounds(ew, rounds1, "parity")
+        ce = (
+            ew.join(
+                lvl1.select(
+                    F.col("id").alias("src"), F.col("community").alias("csrc")
+                ),
+                "src",
+            )
+            .join(
+                lvl1.select(
+                    F.col("id").alias("dst"), F.col("community").alias("cdst")
+                ),
+                "dst",
+            )
+            .groupBy(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
+            .agg(F.sum("_w").alias("w"))
         )
-        .join(
-            lvl1.select(
-                F.col("id").alias("dst"), F.col("community").alias("cdst")
-            ),
-            "dst",
-        )
-        .groupBy(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
-        .agg(F.sum("_w").alias("w"))
-    )
-    lvl2 = louvain_local_moves(ce, rounds2, weight_col="w", schedule="updown")
+        lvl2 = louvain_local_moves(ce, rounds2, weight_col="w", schedule="updown")
     return lvl1.select(
         "id", F.col("community").alias("c1")
     ).join(
@@ -2686,8 +2688,12 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     on parts, authority on suppliers — the bipartite Kleinberg
     reading; suppliers have no out-edges so their hub is exactly 0,
     and vice versa). Plan shape per superstep: two keyed join+grouped
-    sums (the pregel.hits posture) plus two 1-row totals broadcast
-    back — never a driver round trip inside the chain. BIGINT bound:
+    sums (the pregel.hits posture), each eagerly checkpointed with its
+    BIGINT total observed in the same job (``observed_checkpoint``), so
+    each normalization divides by a literal: two jobs per superstep,
+    no aggregate or broadcast build for the totals. Unlike
+    ``pregel.hits`` the two half-steps cannot fuse: the floor division
+    after each one does not cancel. BIGINT bound:
     ``raw * 1e6`` needs Σhub_micro * 1e6 < 9.2e18, i.e. < 9.2e12
     micro-mass — after the first normalization the L1 mass is ≤ 1e6,
     so only superstep 1's raw (n_parts * 1e6) binds: safe below ~9e12
@@ -2699,8 +2705,8 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # against a resident layout — edges cached src-partitioned AND
         # dst-partitioned at the pinned count, so only the score side
         # ever shuffles.
-        by_src = loop.cache(edges.repartition(loop.partitions, "src"))
-        by_dst = loop.cache(edges.repartition(loop.partitions, "dst"))
+        by_src = loop.layout(edges.repartition(loop.partitions, "src"))
+        by_dst = loop.layout(edges.repartition(loop.partitions, "dst"))
         verts = (
             edges.select(F.col("src").alias("id"))
             .unionByName(edges.select(F.col("dst").alias("id")))
@@ -2709,31 +2715,24 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         hub = verts.select("id", F.lit(1_000_000).cast("long").alias("h"))
         auth = None
         for i in range(HITS_EXACT_ITERS):
-            # Each RAW half-step sum is checkpointed eagerly, so each L1
-            # total's BroadcastExchange build and the next half-step
-            # scan a materialized RDD instead of re-executing the chain
-            # (~3 executions of every keyed shuffle per superstep
-            # otherwise).
-            araw = checkpoint(
+            # Each RAW half-step sum is checkpointed eagerly with its
+            # BIGINT total observed in the same job; the normalization
+            # reads that total as a literal, so the next half-step scans
+            # a materialized RDD and no total is re-aggregated.
+            araw, t_a = observed_checkpoint(
                 by_src.join(hub.select(F.col("id").alias("src"), "h"), "src")
                 .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("h").alias("raw"))
+                .agg(F.sum("h").alias("raw")),
+                "raw",
             )
-            t_a = araw.agg(F.sum("raw").alias("t"))
-            auth = (
-                araw.crossJoin(F.broadcast(t_a))
-                .select("id", F.expr("(raw * 1000000) div t").alias("a"))
-            )
-            hraw = checkpoint(
+            auth = araw.select("id", F.expr(f"(raw * 1000000) div {t_a}").alias("a"))
+            hraw, t_h = observed_checkpoint(
                 by_dst.join(auth.select(F.col("id").alias("dst"), "a"), "dst")
                 .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("a").alias("raw"))
+                .agg(F.sum("a").alias("raw")),
+                "raw",
             )
-            t_h = hraw.agg(F.sum("raw").alias("t"))
-            hub = (
-                hraw.crossJoin(F.broadcast(t_h))
-                .select("id", F.expr("(raw * 1000000) div t").alias("h"))
-            )
+            hub = hraw.select("id", F.expr(f"(raw * 1000000) div {t_h}").alias("h"))
         return (
             verts.join(hub, "id", "left")
             .join(auth.withColumnRenamed("a", "a_"), "id", "left")

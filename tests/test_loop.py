@@ -1,18 +1,27 @@
 """The superstep runtime (ezbake_graph_spark/graph/loop.py): loop
 hygiene for every loop entry point, the checkpoint's statistics reset,
-long-diameter convergence, and the single writer of the loop conf."""
+long-diameter convergence, the single writer of the loop conf, the
+co-partitioned edge-layout join, and one Spark job per superstep."""
 
 from __future__ import annotations
 
 import ast
+import uuid
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from ezbake_graph_spark.graph import pregel
-from ezbake_graph_spark.graph.loop import AQE, SHUFFLE_PARTITIONS, checkpoint, scoped_conf
-from ezbake_graph_spark.operators.graph import louvain_local_moves
+from ezbake_graph_spark.graph.loop import (
+    AQE,
+    SHUFFLE_PARTITIONS,
+    checkpoint,
+    observed_checkpoint,
+    scoped_conf,
+    superstep_loop,
+)
+from ezbake_graph_spark.operators.graph import louvain_local_moves, louvain_two_level
 
 PKG = Path(__file__).resolve().parent.parent / "ezbake_graph_spark"
 
@@ -50,6 +59,7 @@ ENTRY_POINTS = {
     ),
     "hits": lambda v, e: pregel.hits(e, iterations=1),
     "louvain_local_moves": lambda v, e: louvain_local_moves(e, rounds=1),
+    "louvain_two_level": lambda v, e: louvain_two_level(e, rounds1=1, rounds2=1),
 }
 
 
@@ -196,4 +206,127 @@ def test_loop_conf_has_one_writer():
         for func, line in _conf_writes(ast.parse(path.read_text())):
             if (rel, func) not in _CONF_WRITERS:
                 offenders.append(f"{rel}:{line} in {func}")
+    assert not offenders, offenders
+
+
+def _plan_nodes(plan):
+    """Every node of a physical plan tree; the plan a cached frame was
+    built with (an InMemoryTableScan's relation) is not a child."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+@pytest.mark.parametrize("via", ["keyed", "layout"])
+def test_superstep_join_reuses_layout_partitioning(spark, via):
+    """A superstep join against a cached edge layout is planned on the
+    layout's resident partitioning: no BroadcastExchange anywhere, no
+    Exchange on the edge side, one Exchange on the state side. The
+    state is a checkpoint, which reports the default size, and the
+    materialized layout is far below the broadcast threshold: unhinted,
+    the planner broadcasts the edges in every superstep."""
+    edges = spark.createDataFrame(
+        [(i, (7 * i + 1) % 40) for i in range(40)], "src long, dst long"
+    )
+    with superstep_loop(spark) as loop:
+        if via == "keyed":
+            layout = loop.keyed(edges, "src")
+        else:
+            layout = loop.layout(edges.repartition(loop.partitions, "src"))
+        # materialized, as in every superstep after the first: the
+        # cached relation then reports its real (tiny) size
+        assert layout.count() == 40
+        state = checkpoint(
+            edges.select(F.col("src").alias("id"), F.lit(1.0).alias("v")).distinct()
+        )
+        joined = layout.join(state, layout.src == state.id)
+        nodes = list(_plan_nodes(joined._jdf.queryExecution().executedPlan()))
+        assert "BroadcastExchange" not in [n.nodeName() for n in nodes]
+        join = next(n for n in nodes if n.nodeName().endswith("Join"))
+        edge_side, state_side = (
+            [n.nodeName() for n in _plan_nodes(join.children().apply(i))]
+            for i in (0, 1)
+        )
+        assert "InMemoryTableScan" in edge_side and "Exchange" not in edge_side
+        assert state_side.count("Exchange") == 1
+        got = sorted(tuple(r) for r in joined.select("src", "dst").collect())
+        assert got == sorted(tuple(r) for r in edges.collect())
+
+
+def _run_counting_jobs(spark, run):
+    """(result of ``run()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_observed_checkpoint_returns_total_in_one_job(spark):
+    """The checkpoint and its observed sum are one Spark job; an empty
+    frame's total is 0, not None."""
+    df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("x"))
+    (ck, total), jobs = _run_counting_jobs(spark, lambda: observed_checkpoint(df, "x"))
+    assert (total, jobs) == (90, 1)
+    assert sorted(r.x for r in ck.collect()) == [2 * i for i in range(10)]
+    assert observed_checkpoint(df.filter("x < 0"), "x")[1] == 0
+
+
+def _ring(spark, n=12):
+    """A directed ring with chords: non-bipartite, every vertex both a
+    src and a dst."""
+    arcs = [(i, (i + 1) % n) for i in range(n)]
+    arcs += [(i, (i + 5) % n) for i in range(0, n, 3)]
+    return spark.createDataFrame(arcs, "src long, dst long")
+
+
+def test_hits_runs_one_job_per_superstep(spark):
+    """``hits`` costs exactly one Spark job per superstep on top of a
+    constant (edge layouts, vertex set, the last superstep's second
+    half-step, the output): job counts at k and k + 3 supersteps
+    differ by 3."""
+    edges = _ring(spark)
+    counts = {
+        k: _run_counting_jobs(spark, lambda k=k: pregel.hits(edges, iterations=k))[1]
+        for k in (2, 5)
+    }
+    assert counts[5] - counts[2] == 3, counts
+
+
+def test_louvain_runs_one_job_per_round(spark):
+    """``louvain_local_moves`` costs exactly one Spark job per round on
+    top of a constant."""
+    sym = pregel.symmetrize(_ring(spark))
+    counts = {
+        r: _run_counting_jobs(spark, lambda r=r: louvain_local_moves(sym, rounds=r))[1]
+        for r in (1, 4)
+    }
+    assert counts[4] - counts[1] == 3, counts
+
+
+def test_layout_hint_and_observation_live_in_loop_module():
+    """Edge layouts and observed normalizers have one home: the loop
+    runtime is the only module that creates an ``Observation``, and the
+    only graph module that hints ``shuffle_hash`` (the relational and
+    dedup joins keep their own hints)."""
+    graph_modules = {"operators/graph.py"} | {
+        f"graph/{p.name}" for p in (PKG / "graph").glob("*.py")
+    }
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel, text = path.relative_to(PKG).as_posix(), path.read_text()
+        if rel == "graph/loop.py":
+            continue
+        if "Observation(" in text:
+            offenders.append(f"{rel}: Observation(")
+        if rel in graph_modules and 'hint("shuffle_hash")' in text:
+            offenders.append(f'{rel}: hint("shuffle_hash")')
     assert not offenders, offenders

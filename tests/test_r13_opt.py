@@ -113,26 +113,16 @@ def test_louvain_struct_max_matches_window_argmax(spark):
     assert new == ref == {(1, 3), (2, 5), (3, 8), (4, 1)}
 
 
-def test_hits_per_side_frames_match_reference_chain(spark):
-    """pregel.hits after the per-side-frame restructure on a small
-    NON-bipartite directed graph (vertex 2 is both src and dst; vertex
-    4 is dst-only) vs a plain-Python power iteration with the same
-    per-half-step L1 normalization. Sums here have <= 2 terms so float
-    results are order-independent — comparison is near-exact."""
-    from ezbake_graph_spark.graph.pregel import hits
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 4), (3, 4)], "src long, dst long"
-    )
-    got = {r.id: (r.hub, r.auth) for r in hits(edges, iterations=5).collect()}
-    verts = [1, 2, 3, 4]
-    adj = [(1, 2), (2, 3), (1, 4), (3, 4)]
+def _hits_reference(adj, iterations):
+    """Plain-Python HITS: the unfused power iteration with an L1
+    normalization after every half-step. Returns {id: (hub, auth)}."""
+    verts = sorted({v for arc in adj for v in arc})
     hub = {v: 1.0 for v in verts}
     auth = {}
-    for _ in range(5):
+    for _ in range(iterations):
         raw = {}
         for s, d in adj:
-            raw[d] = raw.get(d, 0.0) + hub[s]
+            raw[d] = raw.get(d, 0.0) + hub.get(s, 0.0)
         t = sum(raw.values())
         auth = {v: (raw[v] / t if t else 0.0) for v in raw}
         hraw = {}
@@ -140,7 +130,70 @@ def test_hits_per_side_frames_match_reference_chain(spark):
             hraw[s] = hraw.get(s, 0.0) + auth.get(d, 0.0)
         t = sum(hraw.values())
         hub = {v: (hraw[v] / t if t else 0.0) for v in hraw}
-    for v in verts:
-        eh, ea = hub.get(v, 0.0), auth.get(v, 0.0)
+    return {v: (hub.get(v, 0.0), auth.get(v, 0.0)) for v in verts}
+
+
+def _assert_hits_match(spark, adj, iterations):
+    from ezbake_graph_spark.graph.pregel import hits
+
+    edges = spark.createDataFrame(adj, "src long, dst long")
+    got = {r.id: (r.hub, r.auth) for r in hits(edges, iterations=iterations).collect()}
+    want = _hits_reference(adj, iterations)
+    assert set(got) == set(want)
+    for v, (eh, ea) in want.items():
         gh, ga = got[v]
         assert abs(gh - eh) < 1e-9 and abs(ga - ea) < 1e-9, (v, got[v], (eh, ea))
+
+
+def test_hits_per_side_frames_match_reference_chain(spark):
+    """pregel.hits after the per-side-frame restructure on a small
+    NON-bipartite directed graph (vertex 2 is both src and dst; vertex
+    4 is dst-only) vs a plain-Python power iteration with the same
+    per-half-step L1 normalization. Sums here have <= 2 terms so float
+    results are order-independent — comparison is near-exact. The
+    fused supersteps (hub from raw auth sums, normalized once) match
+    the unfused chain too: 19 of them on a graph with a cycle, a
+    self-loop and a src-only vertex, and ``iterations=1``, which runs
+    only the unfused last superstep."""
+    _assert_hits_match(spark, [(1, 2), (2, 3), (1, 4), (3, 4)], 5)
+    adj = [(1, 2), (2, 3), (3, 1), (1, 4), (3, 4), (5, 2), (2, 2)]
+    _assert_hits_match(spark, adj, 20)
+    _assert_hits_match(spark, adj, 1)
+
+
+def test_hits_zero_totals_give_zero_scores(spark):
+    """Arcs from a null src reach no hub, so every L1 total is 0 (an
+    empty raw frame observes sum null): all scores are 0.0, not NaN or
+    null, fused or not."""
+    from ezbake_graph_spark.graph.pregel import hits
+
+    edges = spark.createDataFrame([(None, 1), (None, 2)], "src long, dst long")
+    for iterations in (1, 3):
+        got = sorted(
+            (tuple(r) for r in hits(edges, iterations=iterations).collect()),
+            key=lambda r: (r[0] is not None, r[0]),
+        )
+        assert got == [(None, 0.0, 0.0), (1, 0.0, 0.0), (2, 0.0, 0.0)], got
+
+
+def test_exact_jaccard_plan_single_array_intersect(spark):
+    """``exact_jaccard_pairs`` carries the same single-evaluation
+    barrier as minhash: exactly ONE array_intersect in its optimized
+    plan (without the barrier the threshold filter is pushed into the
+    verify join and array_intersect is planned twice)."""
+    from ezbake_graph_spark.operators.llm_dedup import exact_jaccard_pairs
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy cat"),
+            (3, "an entirely different sentence about spark"),
+        ],
+        "doc_id long, text string",
+    )
+    df = exact_jaccard_pairs(docs, "doc_id", "text", 0.5)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert plan.count("array_intersect") == 1, plan
+    assert [(r.doc1, r.doc2) for r in df.collect()] == [(1, 2)]
